@@ -24,6 +24,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as SQLF
+from pyspark.sql.types import DataType, StructType
 
 # Driver-provided tables (TESTDATA.md). region/nation are O(10^1-10^2) rows at
 # any scale factor → always broadcast. supplier/part/customer grow with SF but
@@ -255,11 +256,17 @@ def _untouched_shuffle_settings() -> set[str]:
     return {"200", "32", str(cpus)} if cpus else {"200", "32"}
 
 
+# Decoded bytes one partition should hold: below this, fixed per-task
+# overhead dominates the work. Shared by the session-wide shuffle sizing
+# below and the per-break sizing of maintained state (ckpt.lineage_break).
+PARTITION_BYTES = 32 << 20
+
+
 def scale_shuffle_partitions(spark: SparkSession, total_bytes: int) -> None:
     """Size post-shuffle parallelism to the data actually attached.
 
     Fixed per-task overhead dominates when reducers hold a few MB each, so
-    target ~32 MiB of DECODED input per post-shuffle partition, floored at 8 (keep
+    target PARTITION_BYTES of DECODED input per post-shuffle partition, floored at 8 (keep
     some parallelism even for toy inputs) and capped at 4096 (at that point
     AQE coalescing — always on, see _RUNTIME_CONFS — owns the decision; the
     reference sizes its dataflow shards the same way, by data not by a
@@ -275,7 +282,7 @@ def scale_shuffle_partitions(spark: SparkSession, total_bytes: int) -> None:
                 not in _untouched_shuffle_settings():
             return
         target = max(int(os.environ.get("SPARK_GRAFT_MIN_SHUFFLE", "8")),
-                     min(total_bytes // (32 << 20), 4096))
+                     min(total_bytes // PARTITION_BYTES, 4096))
         spark.conf.set("spark.sql.shuffle.partitions", str(target))
     except Exception:
         pass
@@ -378,6 +385,25 @@ _LIGHT_MAINT_PLANS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 def light_maintenance_plans(spark: SparkSession) -> bool:
     return bool(_LIGHT_MAINT_PLANS.get(spark, False))
+
+
+def empty_relation(spark: SparkSession, schema: StructType | str
+                   ) -> DataFrame:
+    """An empty frame of ``schema`` (a StructType or a DDL column list)
+    that carries size statistics.
+
+    ``createDataFrame([], schema)`` plans as a ``LogicalRDD`` whose size
+    estimate is Long.MaxValue, and every table snapshot, delta and
+    checkpoint built on it inherits that estimate: Catalyst cannot
+    broadcast a join over it and ckpt.lineage_break cannot size a break.
+    The JVM's ``createDataFrame(java.util.List, StructType)`` plans as a
+    ``LocalRelation`` of the same schema, nullability included, whose
+    estimate is its real (zero) size."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    jschema = spark._jsparkSession.parseDataType(schema.json())
+    return DataFrame(spark._jsparkSession.createDataFrame(
+        spark._jvm.java.util.ArrayList(), jschema), spark)
 
 
 class LazyTables(MutableMapping):

@@ -269,6 +269,13 @@ class MzHttpServer:
         self.close()
 
     # -- WebSocket serve loop -------------------------------------------------
+    def _collect(self, df) -> list:
+        """Collect ``df`` under the session's statement_lock (the collect
+        plans the query; see MzSession.statement_lock)."""
+        with self.session.statement_lock:
+            rows = df.collect()
+        return self.session.check_result_size(rows)
+
     def _serve_ws(self, sock) -> None:
         """The reference's WS message protocol over one connection:
         client sends JSON {"query": "..."} frames; the server answers
@@ -337,7 +344,7 @@ class MzHttpServer:
                          " ".join(head[:2]).upper() if head else "OK")
                     continue
                 try:
-                    rows = self.session.check_result_size(out.collect())
+                    rows = self._collect(out)
                 except Exception as ex:
                     send("Error", {"message": str(ex), "code": "XX000"})
                     break
@@ -368,7 +375,7 @@ class MzHttpServer:
         # frames into a dead queue forever)
         try:
             try:
-                rows = self.session.check_result_size(first.collect())
+                rows = self._collect(first)
             except Exception as ex:
                 send("Error", {"message": str(ex), "code": "XX000"})
                 return
@@ -399,8 +406,8 @@ class MzHttpServer:
                         continue  # timeout tick: nothing committed
                     seq = self.session.commit_seq()
                     delta = self.session.subscribe_poll(sub_id)
-                    batch = (self.session.check_result_size(
-                        delta.collect()) if delta is not None else [])
+                    batch = (self._collect(delta)
+                             if delta is not None else [])
                 except Exception as ex:
                     send("Error", {"message": str(ex), "code": "XX000"})
                     return
@@ -444,7 +451,7 @@ class MzHttpServer:
                 results.append({"ok": tag, "notices": []})
                 continue
             try:
-                collected = self.session.check_result_size(out.collect())
+                collected = self._collect(out)
             except Exception as ex:
                 results.append({"error": {"message": str(ex),
                                           "code": "XX000"},

@@ -321,11 +321,14 @@ class MzPgServer:
         """collect() under the session's statement_timeout: a watchdog
         cancels this backend's job group when the budget elapses
         (reference: the coordinator enforces statement_timeout on peeks).
-        """
+        The collect plans the query, so it holds the session's
+        statement_lock like every other statement."""
         ms = self._timeout_ms(self.session._vars.get("statement_timeout"))
         group = getattr(self._tls, "group", None)
         if ms <= 0 or group is None:
-            return self.session.check_result_size(df.collect())
+            with self.session.statement_lock:
+                rows = df.collect()
+            return self.session.check_result_size(rows)
         import time as _time
         done = threading.Event()
         fired = threading.Event()
@@ -344,7 +347,9 @@ class MzPgServer:
 
         threading.Thread(target=watchdog, daemon=True).start()
         try:
-            return self.session.check_result_size(df.collect())
+            with self.session.statement_lock:
+                rows = df.collect()
+            return self.session.check_result_size(rows)
         except Exception:
             if fired.is_set():
                 raise ValueError(

@@ -28,11 +28,13 @@ reads of a materialized view serve the maintained table — the fast path
 
 from __future__ import annotations
 
+import functools
 import re
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
-from materialize_spark.catalog import Catalog
+from materialize_spark.catalog import Catalog, empty_relation
 from materialize_spark.ckpt import lineage_break
 from materialize_spark.plans import parser as ast
 from materialize_spark.plans.dialect import rewrite, set_session_user
@@ -429,6 +431,15 @@ def split_top_level(s: str, sep: str = ",") -> list[str]:
     return parts
 
 
+def _one_statement_at_a_time(method):
+    """Run ``method`` under the session's ``statement_lock``."""
+    @functools.wraps(method)
+    def run(self, *args, **kwargs):
+        with self.statement_lock:
+            return method(self, *args, **kwargs)
+    return run
+
+
 def _pg_coldefs(coldefs: str, custom_types: dict[str, str] | None = None
                 ) -> str:
     """Translate a PG column-def list to Spark DDL (paren-aware, so
@@ -516,9 +527,13 @@ class MzSession:
         self._sub_next_id = 0
         # Commit clock: every commit bumps the sequence and wakes
         # blocked stream loops (condition-variable push, not a poll).
-        import threading as _threading
         self._commit_seq = 0
-        self._commit_cond = _threading.Condition()
+        self._commit_cond = threading.Condition()
+        # One statement at a time: lineage breaks scope session-wide
+        # Spark confs (ckpt.py) that any other thread's planning would
+        # read. execute, append_rows and the subscribe cursors hold it;
+        # the pgwire/HTTP servers hold it while they collect a result.
+        self.statement_lock = threading.RLock()
         # MV name → (period_s, last_refresh monotonic) for REFRESH EVERY
         self._refresh_every: dict[str, tuple[float, float]] = {}
         self._comments: dict[tuple[str, str], str] = {}  # COMMENT ON
@@ -653,6 +668,7 @@ class MzSession:
         return ctx()
 
     # -- entry points -------------------------------------------------------
+    @_one_statement_at_a_time
     def execute(self, sql: str) -> DataFrame | None:
         """Execute one statement; queries return a DataFrame, DDL returns
         None (SHOW returns a DataFrame listing)."""
@@ -972,8 +988,7 @@ class MzSession:
 
         cur = {n.lower(): _ckpt(seed[k]) for k in seed
                for n in [k]} if seed is not None else {
-            name.lower(): self.spark.createDataFrame(
-                [], _pg_coldefs(coldefs))
+            name.lower(): empty_relation(self.spark, _pg_coldefs(coldefs))
             for name, coldefs, _ in bindings}
         # round 0: one full evaluation against the seed/empty state —
         # picks up base-relation changes (and the base branches)
@@ -4622,18 +4637,22 @@ class MzSession:
         its input arrangement's deltas, src/compute/src/sink/
         materialized_view.rs). Requires multiset-consistent feeds (a
         row is never retracted below zero), which every engine table
-        commit guarantees."""
+        commit guarantees. The published result is one lineage break
+        over the consolidated parts, so every read of the view scans a
+        single leaf."""
         from pyspark.sql import functions as F
 
         from materialize_spark.streaming.ivm_join import (
-            _concat as _concat_parts, _consolidate,
+            _ckpt, _concat as _concat_parts, _consolidate,
         )
         ocols = spec.get("out_names") or spec["cols"]
         out_delta = None
         if out is not None:
-            out_delta = (out.groupBy(*ocols)
-                         .agg(F.sum("diff").alias("diff"))
-                         .filter(F.col("diff") != 0))
+            # a break per part: a read unions the parts' leaves instead
+            # of re-running one consolidation stage per unfolded part
+            out_delta = _ckpt(out.groupBy(*ocols)
+                              .agg(F.sum("diff").alias("diff"))
+                              .filter(F.col("diff") != 0))
             parts = spec.setdefault("proj_parts", [])
             parts.append(out_delta)
             if len(parts) >= 16:  # amortized fold
@@ -4648,12 +4667,13 @@ class MzSession:
             result = None
         else:
             allp = _concat_parts(parts)
-            result = (allp.groupBy(*ocols)
-                      .agg(F.sum("diff").alias("diff"))
-                      .filter(F.col("diff") > 0)
-                      .withColumn("__i", F.explode(
-                          F.sequence(F.lit(1), F.col("diff"))))
-                      .drop("diff", "__i"))
+            result = lineage_break(
+                allp.groupBy(*ocols)
+                .agg(F.sum("diff").alias("diff"))
+                .filter(F.col("diff") > 0)
+                .withColumn("__i", F.explode(
+                    F.sequence(F.lit(1), F.col("diff"))))
+                .drop("diff", "__i"))
         if result is None:
             result = self.spark.sql(
                 rewrite(self._matview_sql[name])).limit(0)
@@ -4887,7 +4907,7 @@ class MzSession:
             return None
         ddl = _pg_coldefs(node.coldefs, self._types)
         self.catalog.register_table(
-            node.name, self.spark.createDataFrame([], ddl))
+            node.name, empty_relation(self.spark, ddl))
 
     def _create_sink(self, node: ast.CreateSink, sql: str):
         # CREATE SINK s FROM obj INTO FILE '<path>' [FORMAT f]
@@ -5777,7 +5797,7 @@ class MzSession:
             try:
                 return self.catalog.table(tname)
             except KeyError:
-                return spark.createDataFrame([], schema_df.schema)
+                return empty_relation(spark, schema_df.schema)
 
         wanted = set(node.tables) if node.tables else None
         registered = []
@@ -6207,6 +6227,7 @@ class MzSession:
                     or k[1].startswith(node.name + ".")]:
             del self._comments[key]
 
+    @_one_statement_at_a_time
     def append_rows(self, table: str, rows) -> None:
         """Append ``rows`` (schema-aligned to ``table``) to a base table
         and feed the insertion as a +1 diff to every delta-maintained MV
@@ -6548,6 +6569,7 @@ class MzSession:
         return out
 
     # -- push subscriptions (per-subscriber cursors) --------------------------
+    @_one_statement_at_a_time
     def subscribe_open(self, sql: str) -> tuple[int, DataFrame,
                                                 ast.Subscribe]:
         """Open a per-subscriber SUBSCRIBE cursor and return
@@ -6620,6 +6642,7 @@ class MzSession:
             ts = 1
         return sub_id, self._shape_sub_batch(node, first, ts), node
 
+    @_one_statement_at_a_time
     def subscribe_poll(self, sub_id: int) -> DataFrame | None:
         """Drain a subscription's queued diff frames into one shaped
         batch, or None when nothing committed since the last poll.
@@ -7641,7 +7664,7 @@ class MzSession:
                     if b[0] in self.catalog._tables or b[0] in
                     self.catalog._views]
         initial = seed if seed is not None else {
-            name: self.spark.createDataFrame([], _pg_coldefs(coldefs))
+            name: empty_relation(self.spark, _pg_coldefs(coldefs))
             for name, coldefs, _ in bindings
         }
 

@@ -102,6 +102,75 @@ def test_shared_session_across_connections(spark):
             assert res["rows"] == [["7"]]
 
 
+def test_reads_never_plan_under_another_connections_break(spark,
+                                                          monkeypatch):
+    """A commit on one connection plans its lineage breaks under scoped
+    session-wide confs (one shuffle partition, no broadcasts). A query
+    that a second connection runs at the same time must still plan with
+    the session's own values: statements run one at a time."""
+    import contextlib
+    import threading
+    import time
+
+    from materialize_spark import ckpt
+
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.autoBroadcastJoinThreshold")
+    own = tuple(spark.conf.get(k) for k in keys)
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    scoped, collect = ckpt._scoped_confs, frame.collect
+    scopes, planned_with = [], []
+
+    @contextlib.contextmanager
+    def slow_scope(spark_, changes):
+        with scoped(spark_, changes):
+            scopes.append(changes)
+            time.sleep(0.05)  # hold the scope open for the other thread
+            yield
+
+    def recording_collect(self):
+        planned_with.append(
+            tuple(self.sparkSession.conf.get(k) for k in keys))
+        return collect(self)
+
+    monkeypatch.setattr(ckpt, "_scoped_confs", slow_scope)
+    monkeypatch.setattr(frame, "collect", recording_collect)
+    sess = MzSession(spark, SF_DIR)
+    errors: list = []
+    with MzPgServer(sess) as srv:
+        with PgWireClient(srv.host, srv.port) as w, \
+                PgWireClient(srv.host, srv.port) as r:
+            w.query("CREATE TABLE wire_cc (k BIGINT, v BIGINT)")
+            w.query("CREATE MATERIALIZED VIEW wire_cc_mv WITH (MAINTENANCE "
+                    "'delta') AS SELECT k, SUM(v) AS s FROM wire_cc "
+                    "GROUP BY k")
+            done = threading.Event()
+
+            def write():
+                try:
+                    for i in range(8):
+                        w.query(f"INSERT INTO wire_cc VALUES ({i % 3}, {i})")
+                except Exception as ex:  # surfaced by the assert below
+                    errors.append(ex)
+                finally:
+                    done.set()
+
+            writer = threading.Thread(target=write, daemon=True)
+            writer.start()
+            reads, deadline = 0, time.monotonic() + 120
+            while not done.is_set() and time.monotonic() < deadline:
+                r.query("SELECT count(*) AS n FROM region")
+                reads += 1
+            writer.join(timeout=60)
+            assert not writer.is_alive(), "writer did not finish"
+            [res] = r.query("SELECT k, s FROM wire_cc_mv ORDER BY k")
+    assert not errors
+    assert res["rows"] == [["0", "9"], ["1", "12"], ["2", "7"]]
+    assert reads > 0
+    assert any(c.get(keys[0], ("",))[0] == "1" for c in scopes)
+    assert set(planned_with) == {own}
+
+
 # -- extended protocol (Parse/Bind/Describe/Execute/Sync) -------------------
 def test_extended_parameterized_select(served):
     """The round-trip every real driver (psycopg/JDBC) performs for a

@@ -728,3 +728,47 @@ def test_qualified_dropped_key_select(spark):
     s.execute("INSERT INTO hb VALUES (1, 5)")
     assert rows(s, "SELECT * FROM hmv") == [(1, 15), (2, 20)]
     s.run_script("DROP MATERIALIZED VIEW hmv; DROP TABLE ha; DROP TABLE hb;")
+
+
+def test_small_commits_keep_state_at_one_partition(spark):
+    """Twenty single-row commits into a small inner table (inserts, an
+    UPDATE, a DELETE that takes a key's count to zero, a NULL key that
+    poisons NOT IN and is then retracted): every break of this state is
+    a few hundred bytes, so the table snapshot and the published results
+    stay at one partition instead of gaining partitions per append, and
+    each view still equals a recompute of its own SQL."""
+    s = _mz(spark)
+    exists_sql = ("SELECT k, v FROM pp_t WHERE EXISTS "
+                  "(SELECT 1 FROM pp_u WHERE pp_u.j = pp_t.k)")
+    not_in_sql = "SELECT k, v FROM pp_t WHERE k NOT IN (SELECT j FROM pp_u)"
+    s.run_script(f"""
+        CREATE TABLE pp_t (k BIGINT, v STRING);
+        CREATE TABLE pp_u (j BIGINT, w BIGINT);
+        INSERT INTO pp_t VALUES (1, 'a'), (2, 'b'), (3, 'c'), (4, 'd'),
+                                (5, 'e'), (NULL, 'n');
+        CREATE MATERIALIZED VIEW pp_e WITH (MAINTENANCE 'delta') AS
+          {exists_sql};
+        CREATE MATERIALIZED VIEW pp_n WITH (MAINTENANCE 'delta') AS
+          {not_in_sql};
+    """)
+    commits = [f"INSERT INTO pp_u VALUES ({k % 5 + 1}, {k})"
+               for k in range(15)]
+    commits[4] = "INSERT INTO pp_u VALUES (NULL, 99)"  # poisons NOT IN
+    commits += [
+        "UPDATE pp_u SET j = 6 WHERE w = 3",
+        "DELETE FROM pp_u WHERE j IS NULL",
+        "DELETE FROM pp_u WHERE j = 2",  # key 2's count goes to zero
+        "INSERT INTO pp_u VALUES (7, 100)",
+        "DELETE FROM pp_u WHERE w = 100",
+    ]
+    assert len(commits) == 20
+    for sql in commits:
+        s.execute(sql)
+        assert rows(s, "SELECT * FROM pp_e") == rows(s, exists_sql)
+        assert rows(s, "SELECT * FROM pp_n") == rows(s, not_in_sql)
+    assert rows(s, "SELECT * FROM pp_n") == [(2, "b")]
+    assert s.catalog.table("pp_u").rdd.getNumPartitions() == 1
+    for v in ("pp_e", "pp_n"):
+        assert s.catalog.table(v).rdd.getNumPartitions() == 1, v
+    s.run_script("DROP MATERIALIZED VIEW pp_e; DROP MATERIALIZED VIEW pp_n;"
+                 "DROP TABLE pp_t; DROP TABLE pp_u;")

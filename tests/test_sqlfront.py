@@ -60,6 +60,38 @@ def test_session_ddl_and_fastpath(spark):
     assert "big_orders" not in {r.name for r in sess.execute("SHOW VIEWS").collect()}
 
 
+def test_table_snapshots_carry_size_statistics(spark):
+    """An in-session table keeps a finite Catalyst size estimate from
+    CREATE TABLE through INSERT, UPDATE and DELETE, so queries over it
+    can broadcast and its lineage breaks can be sized; it keeps the exact
+    DDL schema, nullability included."""
+    from materialize_spark.plans.sqlfront import _pg_coldefs
+    coldefs = "k BIGINT NOT NULL, v TEXT, d NUMERIC(12,2), ts TIMESTAMP"
+    s = MzSession(spark, SF_DIR)
+    s.execute(f"CREATE TABLE stat_t ({coldefs})")
+    want = spark.createDataFrame([], _pg_coldefs(coldefs)).schema
+    got = s.catalog.table("stat_t").schema
+    assert [(f.name, f.dataType, f.nullable) for f in got.fields] == \
+        [(f.name, f.dataType, f.nullable) for f in want.fields]
+    assert not got["k"].nullable
+
+    def size() -> int:
+        return int(s.catalog.table("stat_t")._jdf.queryExecution()
+                   .optimizedPlan().stats().sizeInBytes())
+
+    unknown = 2 ** 63 - 1  # Long.MaxValue: Catalyst's "no statistics"
+    assert size() < unknown
+    for sql in ("INSERT INTO stat_t VALUES "
+                "(1, 'x', 1.50, TIMESTAMP '2024-01-02 03:04:05'), "
+                "(2, NULL, NULL, NULL)",
+                "UPDATE stat_t SET v = 'y' WHERE k = 2",
+                "DELETE FROM stat_t WHERE k = 1"):
+        s.execute(sql)
+        assert size() < unknown, sql
+    assert s.sql("SELECT k, v FROM stat_t").collect() == [(2, "y")]
+    s.execute("DROP TABLE stat_t")
+
+
 def test_create_table_insert_subscribe(spark):
     from materialize_spark.plans.sqlfront import MzSession
     s = MzSession(spark, SF_DIR)
